@@ -24,6 +24,13 @@ one distributed scan; groups then ``unionByName`` with null-fill. One group
 == one schema == exact reference semantics at any file count. Header probing
 runs on EXECUTORS (sources/csv_ingest.probe_headers: concurrent limit-1 text
 scans), so the driver does no per-file I/O anywhere in process_day.
+
+Loaded-row count: with a sink, the audit row's ``total_row_count`` is
+observed during the day write itself (an unnamed ``Observation`` on the
+deduplicated frame), so the day plan runs once, not a second time for a
+``count()``. The write runs under its own job group; a sink that returns
+without running a Spark job raises :class:`SinkDidNotRunError` instead of
+leaving ``Observation.get`` waiting forever.
 """
 
 from __future__ import annotations
@@ -31,9 +38,11 @@ from __future__ import annotations
 import datetime as dt
 import os
 import threading
+import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from py4j.protocol import Py4JJavaError
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,6 +75,10 @@ from etl_from_s3_to_postgresql_template_spark.sources.csv_ingest import (
 # lake paths or sequence themselves.
 _AUDIT_LOCK = threading.Lock()
 
+# The local properties SparkContext.setJobGroup sets; saved and restored
+# around the day write so the caller's own job group survives process_day.
+_JOB_GROUP_KEYS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
 
 class NoReadableFilesError(ValueError):
     """Every file matching a day was unreadable (probe_headers skipped all)."""
@@ -74,6 +87,18 @@ class NoReadableFilesError(ValueError):
         self.day = day
         self.skipped = skipped
         super().__init__(f"no readable files for {day}")
+
+
+class SinkDidNotRunError(RuntimeError):
+    """``Sink.write_day`` returned without running a Spark job, so the
+    frame it was given (and the row count observed on it) never ran."""
+
+    def __init__(self, day: str, sink: Sink):
+        self.day = day
+        super().__init__(
+            f"{type(sink).__name__}.write_day returned for {day} without running a "
+            "Spark job; a sink must execute the frame it is given"
+        )
 
 
 @dataclass
@@ -161,6 +186,43 @@ def ingest_day_plan(
     return merged, skipped
 
 
+def _jobs_ran(spark: SparkSession, group: str) -> bool:
+    """Whether any Spark job ran under job group ``group``. The status
+    store fills from the listener bus asynchronously, so an empty answer
+    is only trusted once the bus has drained (the happy path never
+    waits)."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    if tracker.getJobIdsForGroup(group):
+        return True
+    try:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+    except Py4JJavaError:
+        pass  # other threads kept the bus busy past its timeout; recheck anyway
+    return bool(tracker.getJobIdsForGroup(group))
+
+
+def _write_day_counted(spark: SparkSession, sink: Sink, merged: DataFrame, day: str) -> int:
+    """``sink.write_day`` the day and return the rows it loaded, counted
+    by an Observation during the write. The observe sits on the final
+    (deduplicated) frame, so it runs in the write's result stage, where
+    Spark applies each task's metric update exactly once."""
+    obs = Observation()
+    observed = merged.observe(obs, F.count(F.lit(1)).alias("rows"))
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_KEYS}
+    group = f"process_day-{day}-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, f"process_day {day}: write_day")
+    try:
+        sink.write_day(observed, day)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    if not _jobs_ran(spark, group):
+        raise SinkDidNotRunError(day, sink)
+    return obs.get["rows"]
+
+
 def process_day(
     spark: SparkSession, config: PipelineConfig, day: str, sink: Sink | None = None
 ) -> DayResult:
@@ -200,10 +262,7 @@ def process_day(
         merged = dedup_exact(merged)
 
     if sink is not None:
-        sink.write_day(merged, day)
-        # Post-write counts come from the sink-side frame: one extra count
-        # job instead of the reference's double duplicate scan.
-        total_rows = merged.count()
+        total_rows = _write_day_counted(spark, sink, merged, day)
         audit = spark.createDataFrame(
             [
                 (

@@ -129,14 +129,16 @@ def project_source_file(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 class _CaptureSink:
     """Sink protocol implementation that keeps the audit frame instead
-    of writing it — the day write is a no-op (the data path is already
-    e2e-tested against parquet and embedded-Derby JDBC sinks)."""
+    of writing it. The day runs into the noop sink: the Sink contract
+    requires the frame to run, since process_day observes its row count
+    during that write (the data path is e2e-tested against parquet and
+    embedded-Derby JDBC sinks)."""
 
     def __init__(self) -> None:
         self.audit: DataFrame | None = None
 
     def write_day(self, df: DataFrame, day: str) -> None:  # noqa: ARG002
-        pass
+        df.write.format("noop").mode("overwrite").save()
 
     def write_audit(self, audit_df: DataFrame) -> None:
         self.audit = audit_df

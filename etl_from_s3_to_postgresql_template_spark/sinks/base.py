@@ -25,6 +25,16 @@ from pyspark.sql import DataFrame
 
 
 class Sink(Protocol):
+    """Where ``pipeline.process_day`` lands a day and its audit row.
+
+    ``write_day`` must run the frame it receives, in the calling thread,
+    before it returns, and the first action it runs on that frame must
+    consume all of it (a write does; a ``limit(1)`` probe does not).
+    ``process_day`` counts the loaded rows with an Observation on the
+    frame, which that first action fills; a ``write_day`` that returns
+    without running a Spark job fails the day with
+    ``pipeline.SinkDidNotRunError``."""
+
     def write_day(self, df: DataFrame, day: str) -> None: ...
     def write_audit(self, audit_df: DataFrame) -> None: ...
 

@@ -486,6 +486,35 @@ def test_streaming_bloom_flags_prior_shard_dups_only(spark, tmp_path):
     ]
 
 
+# width = 4 // 4 + 1 = 2: shards {0, 1} {2, 3} {4} and an empty shard 3,
+# for which the partitioned staging write makes no directory
+_SBLOOM_SPARSE_DOCS = [
+    (0, "alpha one", "en", "a", 1),
+    (1, "beta two", "en", "a", 1),
+    (2, "alpha one\ngamma", "en", "a", 1),  # alpha flagged
+    (3, "delta", "en", "a", 1),
+    (4, "gamma\nbeta two", "en", "a", 1),  # both flagged
+]
+
+
+def test_streaming_bloom_empty_shard_streams_empty_batch(spark, tmp_path):
+    sf = _write_table(spark, tmp_path, "documents", _SBLOOM_SPARSE_DOCS, _DOC_SCHEMA)
+    got = {(r[0], r[1]): r[2] for r in _spark_rows(spark, sf, "streaming_bloom_paragraph_dedup")}
+    assert got == {
+        (0, 0): False,
+        (1, 0): False,
+        (2, 0): True,
+        (2, 1): False,
+        (3, 0): False,
+        (4, 0): True,
+        (4, 1): True,
+    }
+    assert _spark_rows(spark, sf, "streaming_bloom_dedup_gate") == [(7, 3, 0, True)]
+    assert _oracle_rows(sf, "streaming_bloom_dedup_gate", "documents") == [
+        (7, 3, 0, True)
+    ]
+
+
 def test_streaming_bloom_gate_green_on_fixture(spark):
     rows = _spark_rows(spark, "/root/testdata/sf0.001", "streaming_bloom_dedup_gate")
     assert rows[0][2] == 0 and rows[0][3] is True

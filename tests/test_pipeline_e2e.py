@@ -4,6 +4,7 @@ date-bearing names -> process_day -> golden-compare merged output + audit row.
 
 from __future__ import annotations
 
+import glob
 import gzip
 import os
 
@@ -11,11 +12,13 @@ import pytest
 
 from etl_from_s3_to_postgresql_template_spark.pipeline import (
     PipelineConfig,
+    SinkDidNotRunError,
     analyze_dates,
     process_day,
     process_range,
 )
 from etl_from_s3_to_postgresql_template_spark.sinks import ParquetSink
+from etl_from_s3_to_postgresql_template_spark.sinks.base import JdbcSink
 
 
 @pytest.fixture(scope="module")
@@ -80,6 +83,103 @@ def test_process_day_golden(spark, source_dir, tmp_path):
     assert a["total_row_count"] == 5
     assert a["date_of_data"].date().isoformat() == "2025-02-03"
     assert "sales_2025-02-03.csv" in a["source_files"]
+
+
+class _RecordingSink:
+    """Wraps a real sink and notes the id the next Spark job will get when
+    ``write_day`` returns and when ``write_audit`` is called (equal ids
+    mean no job ran between the day write and the audit write), and the
+    job group the day write ran under."""
+
+    def __init__(self, spark, inner):
+        self.inner = inner
+        self._sc = spark.sparkContext
+        self._dag = self._sc._jsc.sc().dagScheduler()
+        self.group = None
+        self.next_job_after_write = None
+        self.next_job_at_audit = None
+
+    def write_day(self, df, day):
+        self.group = self._sc.getLocalProperty("spark.jobGroup.id")
+        self.inner.write_day(df, day)
+        self.next_job_after_write = int(self._dag.nextJobId())
+
+    def write_audit(self, audit_df):
+        self.next_job_at_audit = int(self._dag.nextJobId())
+        self.inner.write_audit(audit_df)
+
+
+def _derby_available() -> bool:
+    import pyspark
+
+    return bool(glob.glob(os.path.join(os.path.dirname(pyspark.__file__), "jars", "derby-*.jar")))
+
+
+@pytest.mark.parametrize("kind", ["parquet", "jdbc"])
+def test_loaded_rows_counted_during_write_not_after(spark, source_dir, tmp_path, kind):
+    """The audit row count is observed while the day is written: no Spark
+    job runs between the day write and the audit write (the day plan is
+    not recomputed for a count), and the count equals what landed, with
+    the fixture's planted duplicate removed. The write's jobs are
+    attributed to the day, and the caller (who set no job group) is left
+    without one."""
+    if kind == "parquet":
+        lake = str(tmp_path / "lake")
+        inner = ParquetSink(lake)
+
+        def read(table):
+            return spark.read.parquet(f"{lake}/{table}")
+
+    else:
+        if not _derby_available():
+            pytest.skip("Derby JDBC driver not bundled with this Spark")
+        url = f"jdbc:derby:{tmp_path}/db;create=true"
+        inner = JdbcSink(url=url, table_name="merged_day")
+
+        def read(table):
+            return spark.read.format("jdbc").option("url", url).option("dbtable", table).load()
+
+    sink = _RecordingSink(spark, inner)
+    res = process_day(spark, PipelineConfig(source_dir=source_dir), "2025-02-03", sink)
+
+    assert sink.next_job_after_write is not None
+    assert sink.next_job_after_write == sink.next_job_at_audit
+    assert sink.group.startswith("process_day-2025-02-03-")
+    assert spark.sparkContext.statusTracker().getJobIdsForGroup(sink.group)
+    assert spark.sparkContext.getLocalProperty("spark.jobGroup.id") is None
+    landed = read("merged" if kind == "parquet" else "merged_day").count()
+    audit = read("data_processing_log").collect()
+    assert len(audit) == 1
+    assert res.total_rows == audit[0]["total_row_count"] == landed == 5
+
+
+class _DoNothingSink:
+    def __init__(self):
+        self.audit = None
+
+    def write_day(self, df, day):
+        pass
+
+    def write_audit(self, audit_df):
+        self.audit = audit_df
+
+
+def test_sink_that_runs_no_job_fails_clearly(spark, source_dir):
+    """A write_day that never runs its frame would leave the observed count
+    waiting forever; process_day must raise instead, write no audit row,
+    and hand the caller's job group back."""
+    sc = spark.sparkContext
+    sc.setJobGroup("caller-group", "caller's jobs")
+    try:
+        sink = _DoNothingSink()
+        with pytest.raises(SinkDidNotRunError, match="without running a Spark job"):
+            process_day(spark, PipelineConfig(source_dir=source_dir), "2025-02-03", sink)
+        assert sink.audit is None
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
 
 
 def test_process_day_idempotent_rerun(spark, source_dir, tmp_path):
